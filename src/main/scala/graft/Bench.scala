@@ -48,6 +48,18 @@ object Bench {
     if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else -1L
   }
 
+  /** Generated classes compiled in this JVM so far: each one is a miss of
+    * Spark's codegen cache, so a steady-state run that compiles is cache
+    * thrash or per-execution code variance. */
+  private def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Why a run failed: exception class plus the first message line. */
+  private def failureCause(t: Throwable): String = {
+    val msg = Option(t.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    (t.getClass.getName + ": " + msg).take(400)
+  }
+
   /** Host-memory telemetry (round 12, verdict #3): the r11 driver session
     * carried a GC-heavy storm signature (flat jit, 9-20 s GC, 50-60x CPU,
     * identical stages) that matches neither fixed in-JVM mechanism and is
@@ -190,6 +202,10 @@ object Bench {
     val jit = scala.collection.mutable.ArrayBuffer.empty[Long]
     val memMb = scala.collection.mutable.ArrayBuffer.empty[Long]
     val psi = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var warmCg = -1L
+    val cg = scala.collection.mutable.ArrayBuffer.empty[Long]
+    /** "warm: <cause>" / "run<i>: <cause>" for every failed execution. */
+    val causes = scala.collection.mutable.ArrayBuffer.empty[String]
     var retries = 0
     /** Count of runs BEFORE the first deferred retry (-1 = no retries yet,
       * all runs are primary). Set once when a retry pass first touches this
@@ -287,7 +303,8 @@ object Bench {
     // figure that scales with data volume rather than with plan complexity
     // or host noise. JVM warmup is covered by the warm pass itself.
     // A throwing query records -1 (NOT its elapsed time) so broken queries
-    // are visible in the bench JSON instead of polluting the total.
+    // are visible in the bench JSON instead of polluting the total; the
+    // exception class and first message line land in fail_cause.
     //
     // Round-10 hardening (BENCH_r09's 9.8s->79.6s run2 outlier): the two
     // timed runs grow adaptively up to MAX_RUNS while the two FASTEST runs
@@ -345,9 +362,13 @@ object Bench {
       rec.memMb += memAvailableMb
       rec.psi += memPsiSome10
       stats.reset()
+      val cg0 = codegenCompiles
       val j0 = jitMillis; val g0 = gcMillis; val c0 = cpuNanos; val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case t: Throwable =>
+        rec.causes += s"run${rec.wall.size + 1}: ${failureCause(t)}"; false
+      }
       rec.wall += (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      rec.cg += codegenCompiles - cg0
       rec.gcMs += gcMillis - g0
       rec.cpuS += (if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9)
       val (sg, sp) = stats.snap()
@@ -364,9 +385,13 @@ object Bench {
       val rec = new Rec
       recs(name) = rec
       withAqeScope(name) {
+        val warmCg0 = codegenCompiles
         val warmJit0 = jitMillis; val warmCpu0 = cpuNanos; val warmT0 = System.nanoTime()
-        try { benchable(name)(spark, sfDir).count() } catch { case _: Throwable => () }
+        try { benchable(name)(spark, sfDir).count() } catch { case t: Throwable =>
+          rec.causes += s"warm: ${failureCause(t)}"
+        }
         rec.warmS = (System.nanoTime() - warmT0) / 1e9
+        rec.warmCg = codegenCompiles - warmCg0
         rec.warmCpuS = if (warmCpu0 < 0) -1.0 else (cpuNanos - warmCpu0) / 1e9
         // JIT-drain barrier (round 11): the warm pass queues C2 compilation
         // of the plan's freshly generated classes, and a first timed run
@@ -462,6 +487,12 @@ object Bench {
     val wc = jmap { case (_, r) => fmt(r.warmCpuS) }
     val hm = jmap { case (_, r) => r.memMb.mkString("[", ",", "]") }
     val hp = jmap { case (_, r) => r.psi.map(fmt).mkString("[", ",", "]") }
+    val cgs = jmap { case (_, r) =>
+      s"""{"warm":${r.warmCg},"runs":${r.cg.mkString("[", ",", "]")}}""" }
+    val causeJson = ordered.collect {
+      case (k, r) if r.causes.nonEmpty =>
+        s"\"" + k + "\":" + r.causes.map(Json.str).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val defJson = deferred.map(n => s"\"" + n + "\":" + recs(n).retries)
       .mkString("{", ",", "}")
     val suspectJson = stillSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -507,7 +538,7 @@ object Bench {
         "ReuseProbe; if the isolated-JVM band matches the session best, the anchor is stale - " +
         "regenerate bench_reference.json")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"warm_s":$ws,"warm_cpu_s":$wc,"host_mem_mb":$hm,"psi_some10":$hp,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")}$probeJson,"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"warm_s":$ws,"warm_cpu_s":$wc,"host_mem_mb":$hm,"psi_some10":$hp,"codegen_compiles":$cgs,"fail_cause":$causeJson,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")}$probeJson,"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
     println(full)
     // Self-contained artifact: the full per-query JSON also lands in
     // bench_out.json next to the repo, so post-hoc analysis never depends

@@ -18,12 +18,49 @@ import org.apache.spark.sql.SparkSession
   *    caveat (single-row-group files) is handled by Tables.loadParallel,
   *    not by shrinking this global.
   *  - UTC session timezone is load-bearing for oracle parity.
+  *  - generated-class reuse ([[codegenReuse]]). Spark compiles every
+  *    generated class with Janino into one JVM-wide LRU cache of
+  *    `spark.sql.codegen.cache.maxEntries` entries, default 100. One pass
+  *    of the seven `llm_curation` benchmark queries at sf0.01 compiles
+  *    ~175-195 classes, so at the default every class was evicted before
+  *    its next use: each repeat pass recompiled 174 of them (~18 ms each
+  *    on the query thread, then C2 again from scratch). One full
+  *    `graft.Bench` pass over the registry at sf0.01 compiles 1731
+  *    distinct classes under these confs (2336 without the two below);
+  *    [[CodegenCacheEntries]] holds them with ~2.4x headroom. The heap
+  *    cost is the cached `GeneratedClass` handles and their bytecode stats
+  *    (the classes live in metaspace): the benchmark's `live_heap_mb`
+  *    rose ~2 % (1.5-1.7 MB) with its 120-150-class working sets.
+  *    Two more confs keep an unchanged plan from missing the cache:
+  *    - artifact isolation off: the cache is keyed by the compiling
+  *      thread's class loader, and with isolation on every new session
+  *      (each streaming query runs on a clone; `newSession()` children)
+  *      gets its own executor-side loader, so its task-side classes never
+  *      hit (`stream_session_append`: 22 recompiles per execution). The
+  *      engine adds no per-session artifacts, so one loader loses nothing.
+  *    - no stage id in generated class names: AQE numbers whole-stage
+  *      codegen stages in the order concurrent query stages finish, so the
+  *      same pipeline got a different class name, hence a different
+  *      source, from run to run (`pipeline_curation`). The id stays in the
+  *      plan's `*(n)` markers and in a comment of the generated source.
   */
 object Sessions {
 
+  /** Entries of Spark's generated-class cache; see the sizing note above.
+    * A static conf: the cache is built once per JVM by the first session
+    * that generates code, so every session factory (specs included) must
+    * pass the same value. */
+  val CodegenCacheEntries: Int = 4096
+
+  /** The generated-class reuse confs, for every session factory. */
+  def codegenReuse(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
   /** Local session shaped like the driver harness runs it. */
   def local(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = codegenReuse(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -70,7 +107,7 @@ object Sessions {
     * spark-submit; custom expressions arrive via extensions so SQL-only
     * clients get them too. */
   def productionBuilder(): SparkSession.Builder =
-    SparkSession.builder()
+    codegenReuse(SparkSession.builder())
       .withExtensions(new plans.GraftExtensions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -26,26 +26,14 @@ object Verify {
       }
       finally graft.streaming.Streams.purgeMemorySinks(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Exit stays 0 even on per-query failure: the driver must still run the
     // DuckDB compare for the queries that DID produce parquet — the manifest
     // (read by tools/compare.py) carries the failure signal.
     Files.writeString(Paths.get(s"$outDir/_failures.json"),
-      failed.map(q).mkString("[", ",", "]"))
+      failed.map(Json.str).mkString("[", ",", "]"))
     Scratch.purge(spark)
     spark.stop()
   }

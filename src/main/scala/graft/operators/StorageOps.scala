@@ -434,9 +434,16 @@ object StorageOps extends QueryModule {
   // small side, which is exactly the plan the pin must exclude. The
   // catalog name and warehouse are JVM-stable (a catalog binds its
   // options at first load), with per-run DROP/CREATE for isolation.
+  // The query runs on a child session (`newSession`: shared SparkContext,
+  // isolated conf), as join_bloom_runtime does: storage-partitioned
+  // bucketing must be on when the returned DataFrame plans, which is after
+  // this function returns, and a conf set on the caller's session would
+  // stay behind for every later query. The fixture memo is keyed by the
+  // shared applicationId, so the child still stages the tables once.
   // ------------------------------------------------------------------
   private lazy val catalogWarehouse = scratch("graft_catalog_wh")
-  def dsv2PartitionedJoin(s: SparkSession, dir: String): DataFrame = {
+  def dsv2PartitionedJoin(parent: SparkSession, dir: String): DataFrame = {
+    val s = parent.newSession()
     s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")

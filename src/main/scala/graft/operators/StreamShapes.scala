@@ -319,6 +319,22 @@ object StreamShapes extends QueryModule {
   private val incrStages = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   graft.Scratch.onPurge(() => incrStages.clear())
 
+  /** One chunk "arrives": the stage's `part-` files are copied into the
+    * landing under `prefix`. A purged or half-written stage fails by name,
+    * not as an NPE (missing dir) or a silently empty chunk (no part- files). */
+  private[graft] def arrive(stage: String, landing: String, prefix: String): Unit = {
+    val dst = java.nio.file.Paths.get(landing)
+    java.nio.file.Files.createDirectories(dst)
+    val parts = Option(new java.io.File(stage).listFiles()).getOrElse(
+      throw new IllegalStateException(s"stream_incremental: stage directory $stage is missing"))
+      .filter(f => f.isFile && f.getName.startsWith("part-"))
+    if (parts.isEmpty)
+      throw new IllegalStateException(s"stream_incremental: stage directory $stage has no part- files")
+    parts.foreach { f =>
+      java.nio.file.Files.copy(f.toPath, dst.resolve(s"${prefix}_${f.getName}"))
+    }
+  }
+
   def streamIncremental(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
@@ -337,15 +353,6 @@ object StreamShapes extends QueryModule {
     val ckpt = graft.Scratch.streamCkptDir("graft_stream_incr_ckpt")
     val schema = org.apache.spark.sql.types.StructType(
       Tables.events.filterNot(_.name == "props"))
-    def arrive(stage: String, prefix: String): Unit = {
-      val dst = java.nio.file.Paths.get(landing)
-      java.nio.file.Files.createDirectories(dst)
-      new java.io.File(stage).listFiles()
-        .filter(f => f.isFile && f.getName.startsWith("part-"))
-        .foreach { f =>
-          java.nio.file.Files.copy(f.toPath, dst.resolve(s"${prefix}_${f.getName}"))
-        }
-    }
     def drainOnce(): Unit = {
       val q = s.readStream.schema(schema).parquet(landing)
         .writeStream.format("parquet")
@@ -353,9 +360,9 @@ object StreamShapes extends QueryModule {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    arrive(stage1, "c1") // chunk 1 lands
+    arrive(stage1, landing, "c1") // chunk 1 lands
     drainOnce()
-    arrive(stage2, "c2") // chunk 2 lands
+    arrive(stage2, landing, "c2") // chunk 2 lands
     drainOnce()          // resume
     s.read.schema(schema).parquet(out).select(cols: _*).orderBy("event_id")
   }

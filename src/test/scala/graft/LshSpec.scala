@@ -27,7 +27,7 @@ class LshSpec extends SparkTestBase {
   }
 
   test("extensions-built session resolves cosine_fast from SQL directly") {
-    val s2: SparkSession = SparkSession.builder()
+    val s2: SparkSession = graft.Sessions.codegenReuse(SparkSession.builder())
       .master("local[2]")
       .appName("ext-test")
       .config("spark.sql.session.timeZone", "UTC")

@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one SparkSession per suite (lazy). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  // the engine's codegen-reuse confs: the cache size is JVM-wide and set
+  // by whichever suite's session generates code first
+  lazy val spark: SparkSession = Sessions.codegenReuse(SparkSession.builder())
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.adaptive.enabled", "true")

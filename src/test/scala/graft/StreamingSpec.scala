@@ -263,4 +263,25 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
       .filter(col("n_users") > col("cohort_size")).count() == 0)
     ret.unpersist()
   }
+
+  test("incremental ingest: a missing or empty stage fails naming its directory") {
+    val root = Files.createTempDirectory("graft_arrive_spec")
+    try {
+      val landing = root.resolve("landing").toString
+      val missing = root.resolve("missing").toString
+      val e1 = intercept[IllegalStateException](
+        graft.operators.StreamShapes.arrive(missing, landing, "c1"))
+      assert(e1.getMessage.contains(missing) && e1.getMessage.contains("missing"))
+      val empty = Files.createDirectory(root.resolve("empty"))
+      Files.createFile(empty.resolve("_SUCCESS"))
+      val e2 = intercept[IllegalStateException](
+        graft.operators.StreamShapes.arrive(empty.toString, landing, "c1"))
+      assert(e2.getMessage.contains(empty.toString) && e2.getMessage.contains("no part- files"))
+    } finally {
+      val it = Files.walk(root)
+      try it.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally it.close()
+    }
+  }
 }
