@@ -18,7 +18,7 @@ object Scratch {
 
   private val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val tables = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val hooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+  private val memos = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRegisteredPaths()))
 
@@ -34,7 +34,7 @@ object Scratch {
   /** Fresh run-unique STREAMING-CHECKPOINT dir path, on tmpfs (/dev/shm)
     * when available. Micro-batch progress (offset/commit WAL) and state
     * store deltas fsync into the checkpoint every batch — measured ~180ms
-    * of a ~1.3s fixture-scale micro-batch (StreamProfile). For the
+    * of a ~1.3s fixture-scale micro-batch (round-10 stream profile). For the
     * memory-sink bench/verify streams the checkpoint is EPHEMERAL BY
     * SEMANTICS (the query dies with the run), so a RAM-backed dir is the
     * honest medium; production streams pass a durable checkpointLocation
@@ -62,16 +62,32 @@ object Scratch {
     n
   }
 
-  /** Invalidate-on-purge callback for module-level caches that memoize
-    * scratch paths (e.g. StreamShapes' landing-dir cache): purge would
-    * otherwise leave them pointing at deleted dirs. */
-  def onPurge(f: () => Unit): Unit = hooks.add(f)
+  /** Staged-input memo, one entry per (session, sfDir, tag): the landing
+    * dirs, staged tables and trained artifacts that queries READ are pure
+    * functions of the fixture, so each is built once per session instead
+    * of inside every timed execution. `build` runs outside any map lock
+    * (get, build, putIfAbsent), so a multi-second Spark job holds no map
+    * bin and a build may itself memoize another key; of two racing first
+    * builds the first put wins, and the loser's scratch dirs go with the
+    * next purge. Tags share one namespace across modules. Values are
+    * opaque handles (paths, stamps, table names, sessions). Cleared by [[purge]],
+    * which deletes the dirs the entries point at. */
+  def memo[A <: AnyRef](s: SparkSession, dir: String, tag: String)(build: => A): A = {
+    val key = s.sparkContext.applicationId + "|" + dir + "|" + tag
+    val hit = memos.get(key)
+    if (hit != null) hit.asInstanceOf[A]
+    else {
+      val v = build
+      val won = memos.putIfAbsent(key, v)
+      (if (won == null) v else won).asInstanceOf[A]
+    }
+  }
 
   /** Drop registered tables (managed: DROP deletes their data), delete
-    * registered dirs, invalidate dependent caches. Idempotent; call after
-    * the last action that could read a scratch artifact. */
+    * registered dirs, clear the [[memo]]. Idempotent; call after the last
+    * action that could read a scratch artifact. */
   def purge(s: SparkSession): Unit = {
-    hooks.forEach(f => f())
+    memos.clear()
     tables.forEach { t =>
       try s.sql(s"DROP TABLE IF EXISTS `$t`")
       catch { case _: Throwable => () }

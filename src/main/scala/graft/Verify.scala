@@ -24,7 +24,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
-      finally graft.streaming.Streams.purgeMemorySinks(spark)
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")

@@ -238,9 +238,10 @@ object DedupOps extends QueryModule {
   private val ccLabelCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Measurement hook (ScaleProbe): drop the memoized labels AND edges so
-    * a timed run rebuilds the full iterative pipeline instead of reading
-    * its cached artifacts. */
+  /** Pre-run reset of graft.Bench and the perfbench harness: drop the
+    * memoized labels AND edges so a timed dedup_minhash_clusters run
+    * rebuilds the full iterative pipeline instead of reading its cached
+    * artifacts. */
   private[graft] def resetClusterCache(): Unit = { ccLabelCache.clear(); edgeCache.clear() }
 
   private val edgeCache =
@@ -1127,7 +1128,7 @@ object DedupOps extends QueryModule {
   // parquet — the stand-in for the production store tables a curation
   // pipeline maintains as batches are accepted — and the probe path only
   // READS them: two key-only semi-joins whose cost is independent of
-  // rebuilding the corpus signature pipeline (ScaleProbe measures the
+  // rebuilding the corpus signature pipeline (the 10x scale probe measured the
   // probe-vs-rebuild split). Same output contract as incremental(), so the
   // identical DuckDB oracle checks it.
   // ------------------------------------------------------------------

@@ -39,7 +39,7 @@ object LshOps extends QueryModule {
     * mod P is injective over the index domain), so two documents share a
     * bucket whenever they share an argmin INDEX — bucket sizes, and the
     * candidate-pair join output, grow quadratically with corpus size.
-    * The round-11 ScaleProbe caught it: 1.8 s at sf0.1 -> 36 s at x10
+    * The round-11 10x scale probe (SCALING.md) caught it: 1.8 s at sf0.1 -> 36 s at x10
     * (20x wall at 10x data). At 2^20 the minhash domain is ~10^6 values,
     * buckets track TRUE similarity, and the probe is back to near-linear.
     * Per-row cost is unchanged: the sparse vector still has one entry

@@ -200,7 +200,7 @@ object Multimodal extends QueryModule {
   private def ahashFp(s: SparkSession, dir: String): DataFrame = {
     // loadParallel (round 11): the 32-point byte-sampling chain below is
     // compute-heavy and narrow, and the fixture's single-row-group file
-    // caps a plain scan at 1 task — the ScaleProbe showed this query
+    // caps a plain scan at 1 task — the 10x scale probe showed this query
     // running its whole fingerprint stage serially at base scale.
     val d = Tables.loadParallel(s, dir, "documents")
       .filter(col("n_chars") >= 32)

@@ -532,15 +532,10 @@ object VectorOps extends QueryModule {
     * resources to leak. Registered via BenchOnly so BENCH_r{N}.json
     * carries an honest steady-state search cost next to emb_pq_topk's
     * train+search cost. */
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[Seq[(Long, Array[Double])]]]()
-
   private[graft] def pqTopKSearchOnly(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
-    val cbs = pqCbCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ => pqTrain(e))
-    pqSearch(s, e, cbs)
+    pqSearch(s, e, graft.Scratch.memo(s, dir, "pq_codebooks")(pqTrain(e)))
   }
 
   /** Shared oracle fragments: the PQ train/encode CTE chain (`e`, `s`,
@@ -958,7 +953,7 @@ object VectorOps extends QueryModule {
   // inherently sequential in K and operates on a list that is bounded BY
   // CONSTRUCTION at any corpus size). A first cut expressed the K stages
   // as chained DataFrames; each stage re-derived the candidate lineage
-  // and the ScaleProbe showed ~30x the exact-top-K cost at 10x corpus —
+  // and the 10x scale probe showed ~30x the exact-top-K cost at 10x corpus —
   // the collect form is one scan. All doubles in the greedy are VALUES
   // COLLECTED FROM SPARK EXPRESSIONS (cos, pair sims); the driver only
   // multiplies by the exactly-representable 0.5 and subtracts, the same

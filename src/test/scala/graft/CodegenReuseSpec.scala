@@ -19,7 +19,6 @@ class CodegenReuseSpec extends SparkTestBase {
       // memoized labels instead of running the iterative pipeline
       if (n == "dedup_minhash_clusters") operators.DedupOps.resetClusterCache()
       registry(n)(spark, sfDir).count()
-      streaming.Streams.purgeMemorySinks(spark)
     }
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
   }

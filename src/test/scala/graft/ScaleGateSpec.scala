@@ -1,18 +1,20 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Round-11 gate for SCALING.md's central claim: NO SERIAL FUNNEL — no
-  * stage that moves real corpus data through one task. The 10x probes in
-  * SCALING.md are rerun by hand (ScaleProbe); this spec wires a scaled-
-  * down version into `sbt test` so a future funnel regression (a lost
+  * stage that moves real corpus data through one task. The 10x
+  * measurements in SCALING.md came from a hand-run probe; this spec wires
+  * a scaled-down version into `sbt test` so a future funnel regression (a lost
   * repartition, a nullable join key splitting an exchange, a collect-and-
   * rebroadcast creeping into a hot path) fails the suite automatically.
   *
   * The sf0.001 spec fixture is far too small to distinguish a funnel
   * from a bounded-relation aggregate (codebooks, offsets — 1-task by
-  * design), so the spec replicates sf0.01 FACTOR-fold with ScaleProbe's
-  * character-preserving replica and asserts, over a 3-query sample with
+  * design), so the spec replicates sf0.01 FACTOR-fold with a
+  * character-preserving replica ([[replicate]]) and asserts, over a 3-query sample with
   * distinct shuffle spines (shingle self-join / signature agg+band join /
   * sharded prefix-sum):
   *  - no 1-task stage moved more than HEAVY bytes (input + shuffle read);
@@ -22,7 +24,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 class ScaleGateSpec extends SparkTestBase {
 
-  /** Spec-scale analog of ScaleProbe's 16 MB threshold, calibrated to the
+  /** Spec-scale analog of the 10x probe's 16 MB threshold, calibrated to the
     * x12 sf0.01 replica. r12 measured the widest multi-task stage at 9 MB
     * (32-char hex-string shingle keys); the round-13 int64-key redesign
     * shrank the same shuffle to 3.3 MB — a direct artifact of the 4x key
@@ -49,6 +51,47 @@ class ScaleGateSpec extends SparkTestBase {
   // prefix sum that replaced the round-9 serial clamp.
   private val SAMPLE = Seq("dedup_ngram_jaccard", "dedup_minhash_pairs", "docs_token_budget")
 
+  private val ID_OFF = 1000000000000L
+
+  /** FACTOR-fold replica of `base`'s documents/embeddings/events that
+    * preserves workload CHARACTER, not just row count:
+    *  - `documents`: copy c tags every token with `_xc`, so copies are NOT
+    *    near-duplicates of each other (cross-copy shingles disjoint). An
+    *    untagged replica would turn every document into a FACTOR-member
+    *    identical cluster and grow the pair OUTPUT quadratically — that
+    *    would measure the replica artifact, not the engine. Within-copy
+    *    duplicate structure is untouched, so the near-dup workload is
+    *    FACTOR independent corpora — exactly how a bigger corpus behaves.
+    *  - `embeddings`/`events`: ids shift by c*1e12; values unchanged. The
+    *    bounded ANN query sets (vec_id < NQ) stay in copy 0, so query
+    *    count is fixed while the searched corpus grows FACTOR-fold. */
+  private def replicate(s: SparkSession, base: String, out: String, factor: Int): Unit = {
+    if (new java.io.File(out, "_DONE").exists()) return
+    new java.io.File(out).mkdirs()
+    def copies(name: String, f: (DataFrame, Int) => DataFrame): Unit = {
+      val src = graft.sources.Tables.load(s, base, name)
+      (0 until factor).map(c => f(src, c)).reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$out/$name.parquet")
+    }
+    copies("documents", (d, c) =>
+      if (c == 0) d
+      else d.select(
+        (col("doc_id") + lit(c * ID_OFF)).as("doc_id"),
+        array_join(transform(split(col("text"), "\\s+"),
+          t => concat(t, lit(s"_x$c"))), " ").as("text"),
+        col("lang"), col("source"), col("n_chars")))
+    copies("embeddings", (d, c) =>
+      if (c == 0) d
+      else d.select((col("vec_id") + lit(c * ID_OFF)).as("vec_id"),
+        col("embedding"), col("label")))
+    copies("events", (d, c) =>
+      if (c == 0) d
+      else d.select((col("event_id") + lit(c * ID_OFF)).as("event_id"), col("ts"),
+        (col("user_id") + lit(c * ID_OFF)).as("user_id"),
+        col("event_type"), col("value"), col("props")))
+    new java.io.File(out, "_DONE").createNewFile()
+  }
+
   test("no serial funnel: 1-task stages move no real data on a replicated corpus") {
     // Round-12 advice hardening: the fixture root comes from the shared
     // test config, and an environment without the sf0.01 fixture cancels
@@ -57,14 +100,12 @@ class ScaleGateSpec extends SparkTestBase {
     val base = s"$testDataRoot/sf0.01"
     assume(new java.io.File(base, "documents.parquet").exists(),
       s"sf0.01 fixture absent at $base — scale gate not runnable here")
-    // Same path ScaleProbe would build for this (base, factor): one
-    // replica serves both the manual probes and this gate (memoized by
-    // the _DONE marker — deliberately NOT cleaned up, so repeated `sbt
-    // test` runs and hand-run ScaleProbe share one build. Footprint is
-    // bounded and small: the x12 sf0.01 replica measures ~5 MB of parquet
-    // under /tmp/graft_scale, rebuilt only after a /tmp wipe).
+    // Memoized by the _DONE marker — deliberately NOT cleaned up, so
+    // repeated `sbt test` runs share one build. Footprint is bounded and
+    // small: the x12 sf0.01 replica measures ~5 MB of parquet under
+    // /tmp/graft_scale, rebuilt only after a /tmp wipe.
     val out = s"/tmp/graft_scale/sf0.01_x$FACTOR"
-    ScaleProbe.replicate(spark, base, out, FACTOR)
+    replicate(spark, base, out, FACTOR)
     val stats = new StageStats
     spark.sparkContext.addSparkListener(stats)
     try {

@@ -4,25 +4,36 @@ import java.nio.file.{Files, Paths}
 
 /** The scratch-artifact registry must actually tear down what the engine
   * creates: registered dirs deleted recursively, registered managed tables
-  * dropped (with their warehouse data), and purge-dependent caches
-  * invalidated — the round-4 judge host had accumulated 420 /tmp scratch
-  * dirs and 164 orphan warehouse tables from runs without this lifecycle. */
+  * dropped (with their warehouse data), and the staged-input memo cleared
+  * — the round-4 judge host had accumulated 420 /tmp scratch dirs and 164
+  * orphan warehouse tables from runs without this lifecycle. */
 class ScratchSpec extends SparkTestBase {
 
-  test("purge deletes registered dirs, drops registered tables, fires hooks") {
+  test("purge deletes registered dirs, drops registered tables, invalidates the memo") {
     val d = Scratch.dir("graft_scratch_spec")
     Files.createDirectories(Paths.get(d, "sub"))
     Files.writeString(Paths.get(d, "sub", "f.txt"), "x")
     val t = Scratch.table(spark, "scratch_spec")
     spark.range(3).write.mode("overwrite").saveAsTable(t)
     assert(spark.catalog.tableExists(t))
-    var invalidated = false
-    Scratch.onPurge(() => invalidated = true)
+    var builds = 0
+    def staged(): String = Scratch.memo(spark, "spec_dir", "purge_spec") { builds += 1; d }
+    assert(staged() == d && staged() == d && builds == 1, "memo rebuilt before purge")
 
     Scratch.purge(spark)
 
     assert(!Files.exists(Paths.get(d)), s"registered dir survived purge: $d")
     assert(!spark.catalog.tableExists(t), s"registered table survived purge: $t")
-    assert(invalidated, "onPurge hook did not fire")
+    staged()
+    assert(builds == 2, "memo entry survived purge")
+  }
+
+  test("a memo build may memoize a second key") {
+    var inner = 0
+    def innerStage(): String = Scratch.memo(spark, "spec_dir", "nested_inner") { inner += 1; "in" }
+    val outer = Scratch.memo(spark, "spec_dir", "nested_outer")(innerStage() + "+out")
+    assert(outer == "in+out")
+    assert(innerStage() == "in" && inner == 1, "the nested build's key was not memoized")
+    assert(Scratch.memo[String](spark, "spec_dir", "nested_outer")(fail("outer rebuilt")) == "in+out")
   }
 }

@@ -209,4 +209,29 @@ class StorageSpec extends SparkTestBase {
     assert(matched > 0 && read == matched, s"read $read files, window holds $matched")
     assert(read < total, s"no pruning: read $read of $total files")
   }
+
+  test("graftq queries leave no catalog conf on the caller; each run mutates a pristine copy") {
+    // the caller is a fresh session, so a catalog registered by any
+    // earlier suite on the shared session cannot mask a leak
+    val caller = spark.newSession()
+    val ev = Tables.load(spark, sfDir, "events")
+    val survivors = ev.filter(!(col("event_type") === "click" || col("value") < 120.0)).count()
+    val updatedSum = ev.select(sum(when(col("event_type") === "error", col("value") * 2)
+      .otherwise(col("value")))).head().getDouble(0)
+    def valueSum(q: String): Double =
+      SparkEntry.queries(q)(caller, sfDir).select(sum(col("value"))).head().getDouble(0)
+    (1 to 2).foreach { run =>
+      assert(SparkEntry.queries("delete_dsv2_rewrite")(caller, sfDir).count() == survivors,
+        s"delete run $run")
+      assert(SparkEntry.queries("call_dsv2_compact")(caller, sfDir).count() == ev.count(),
+        s"compact run $run")
+      // UPDATE doubles the error rows: a run against a table that was not
+      // restored to pristine would double them twice
+      assert(math.abs(valueSum("update_dsv2_rewrite") - updatedSum) < 1e-6 * math.abs(updatedSum),
+        s"update run $run")
+    }
+    Seq("spark.sql.catalog.graftq", "spark.sql.catalog.graftq.warehouse").foreach { k =>
+      assert(caller.conf.getOption(k).isEmpty, s"$k left on the caller's session")
+    }
+  }
 }

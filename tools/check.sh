@@ -18,6 +18,9 @@ else
 fi
 OUT=$(mktemp -d /tmp/graft_check.XXXX)
 sbt -batch compile
+# the benchmark harness (perfbench/scala) calls into the engine but is not
+# an sbt source: compile it too, so a change that breaks it fails here
+python3 perfbench/build.py
 if [[ "$SKIP_TESTS" == 0 ]]; then
   sbt -batch test
   sbt -batch "runMain graft.Smoke"   # t1-style entry smoke (rows > 0)
